@@ -807,10 +807,7 @@ def main():
         # drop the draw's persisted cells immediately: two extra cached
         # index copies would pressure the block manager for the whole
         # remaining bench and perturb the very numbers being stabilized
-        try:
-            idx_n.postings.unpersist()
-        except Exception:
-            pass
+        idx_n.unpersist()
         build_draws.append(rep_n["docs_per_sec"])
         if rep_n["docs_per_sec"] > build_rep["docs_per_sec"]:
             # keep the best draw's timing fields as the headline (the

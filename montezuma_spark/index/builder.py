@@ -875,6 +875,17 @@ class Index:
         # in the holes.json sidecar; survives undelete_all by design.
         self.holes: np.ndarray = load_holes(index_dir)
         self._masked_cache: tuple | None = None
+        # frames build_index persisted (the ranged scan and the cells);
+        # unpersist() releases them
+        self._persisted: list = []
+
+    def unpersist(self) -> None:
+        """Release the cached frames ``build_index`` persisted for this
+        index. A saved index keeps serving from its files; an in-memory
+        one recomputes from lineage on next use."""
+        for df in self._persisted:
+            df.unpersist()
+        self._persisted = []
 
     # ------------------------------------------------------------- deletions
     def delete_docs(self, docids) -> int:
@@ -1363,4 +1374,5 @@ def build_index(
     if index_dir:
         idx = idx.save(index_dir)
         idx.build_report["build_seconds"] = time.time() - t0
+    idx._persisted = [ranged, postings_all]
     return idx

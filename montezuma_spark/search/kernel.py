@@ -122,24 +122,23 @@ TOMB_FIELD = "\x00tomb"
 CELL_COLS = ("field", "term", "shard", "postings", "positions", "pos_off",
              "blk_first", "blk_last", "blk_n", "blk_off", "blk_codes_len",
              "blk_ext_len", "blk_maxtf", "blk_mindl",
-             "blk_imp_n", "blk_imp_tf", "blk_imp_dl")
+             "blk_imp_n", "blk_imp_tf", "blk_imp_dl", "cf")
 
 
 class CellRow:
     """One parsed cell row. ``full`` memoizes the FULL-cell decode
-    (docids, tfs, dls): rows are shared across queries in the preload
-    tier, and a cell's decode is query-independent, so the hot serving
-    path decodes each cell once ever (callers never mutate the returned
-    arrays — they mask/copy). Cost: ~24 B/posting for queried terms,
-    bounded by the preload guard. Worker-side rows are per-task, where
-    the cache is just a same-query memo."""
+    (docids, tfs, dls) and ``full_pos`` the full positions stream: a
+    cell's decode is query-independent, so rows shared across queries
+    (cell cache, preload tier, one batch task) decode each cell once
+    (callers never mutate the returned arrays — they mask/copy). Once
+    the whole term decodes, ``full`` is a view of ``TermCells.full``."""
 
     __slots__ = (*CELL_COLS, "full", "full_pos")
 
     def __init__(self, field, term, shard, postings, positions, pos_off,
                  blk_first, blk_last, blk_n, blk_off, blk_codes_len,
                  blk_ext_len, blk_maxtf, blk_mindl,
-                 blk_imp_n=None, blk_imp_tf=None, blk_imp_dl=None):
+                 blk_imp_n=None, blk_imp_tf=None, blk_imp_dl=None, cf=None):
         self.field = field
         self.term = term
         self.shard = shard
@@ -157,6 +156,7 @@ class CellRow:
         self.blk_imp_n = blk_imp_n
         self.blk_imp_tf = blk_imp_tf
         self.blk_imp_dl = blk_imp_dl
+        self.cf = cf
         self.full = None
         self.full_pos = None
 
@@ -174,12 +174,164 @@ def rows_from_pandas(pdf: pd.DataFrame) -> list[CellRow]:
     return [CellRow(*vals) for vals in zip(*cols)]
 
 
+def _cell_meta(row) -> dict:
+    # int64 array views, never list(): boxing every per-block value
+    # to PyObjects cost ~316 rows × 8 fields × O(blocks) per hot
+    # multi-cell query; every consumer (decode_cell/_rows,
+    # block_upper_bounds, _blocks_for) np.asarray()s these anyway
+    return {
+        "first": np.asarray(row.blk_first, dtype=np.int64),
+        "last": np.asarray(row.blk_last, dtype=np.int64),
+        "n": np.asarray(row.blk_n, dtype=np.int64),
+        "off": np.asarray(row.blk_off, dtype=np.int64),
+        "codes_len": np.asarray(row.blk_codes_len, dtype=np.int64),
+        "ext_len": np.asarray(row.blk_ext_len, dtype=np.int64),
+        "maxtf": np.asarray(row.blk_maxtf, dtype=np.int64),
+        "mindl": np.asarray(row.blk_mindl, dtype=np.int64),
+    }
+
+
+def _row_block_ubs(sim, r, avgdl: float) -> np.ndarray:
+    """Per-block tf_norm upper bounds for one cell row. Uses the
+    competitive-impact fronts (max tf_norm over the block's ACTUAL
+    (tf, dl) Pareto pairs — tight) when the cell carries them; falls
+    back to the classic loose (maxtf, mindl) pairing for pre-impact
+    layouts. Valid under the Similarity monotone tf_norm contract."""
+    imp_n = r.blk_imp_n
+    if imp_n is not None and len(imp_n) == len(r.blk_n) and len(imp_n):
+        n = np.asarray(imp_n, dtype=np.int64)
+        norms = sim.tf_norm(
+            np.asarray(r.blk_imp_tf, dtype=np.int64),
+            np.asarray(r.blk_imp_dl, dtype=np.int64),
+            avgdl,
+        )
+        return np.maximum.reduceat(norms, np.cumsum(n) - n)
+    return sim.tf_norm(
+        np.asarray(r.blk_maxtf, dtype=np.int64),
+        np.asarray(r.blk_mindl, dtype=np.int64),
+        avgdl,
+    )
+
+
+class TermCells:
+    """Every cell row of one (field, term), sorted by first docid, plus
+    the term's query-independent state, computed once and kept for as
+    long as the object lives (a cell-cache entry, a preload entry, or
+    one Spark task shared by every plan of a batch) — the per-term flat
+    arrays of a columnar inverted index.
+
+    Normally one row per key; a multi-segment (streaming) index or a
+    multi-shard scan contributes one row per segment/shard, with
+    disjoint ascending docid ranges — merged at decode time by
+    first-docid order, the multi-term-doc-enum analog
+    (src/index/multi-reader.lisp:225-318).
+
+    * ``full`` — (docids, tfs, dls) over all rows, PRE-tombstone (deletes
+      mask after, per query); each row's ``full`` is a view into it.
+    * per-block tf_norm bounds, their max, and the ``tf_norm`` array over
+      ``full`` — functions of (similarity, avgdl) only, memoized under
+      that key (one key at a time: a Searcher has one similarity)."""
+
+    __slots__ = ("field", "term", "rows", "full", "_memo", "_boosts")
+
+    def __init__(self, field, term, rows: list):
+        if len(rows) > 1:
+            rows = sorted(
+                rows, key=lambda r: r.blk_first[0] if len(r.blk_first) else 0
+            )
+        self.field = field
+        self.term = term
+        self.rows = rows
+        self.full = None
+        self._memo = None  # ((similarity, avgdl), {name: array})
+        self._boosts = None
+
+    def set_full(self, docids, tfs, dls) -> None:
+        """Install the whole-term decode; rows keep views into it (no
+        posting stream is held twice)."""
+        self.full = (docids, tfs, dls)
+        e = 0
+        for r in self.rows:
+            s, e = e, e + int(np.asarray(r.blk_n, dtype=np.int64).sum())
+            r.full = (
+                (docids[s:e], tfs[s:e], dls[s:e])
+                if len(self.rows) > 1 else self.full
+            )
+            if r.full_pos is not None:
+                r.full_pos = (r.full[0], r.full[1], *r.full_pos[2:])
+
+    def _state(self, sim, avgdl: float) -> dict:
+        key = (sim, avgdl)
+        m = self._memo
+        if m is None or m[0] != key:
+            m = self._memo = (key, {})
+        return m[1]
+
+    def block_ubs(self, sim, avgdl: float) -> tuple[np.ndarray, float]:
+        """(per-block tf_norm bounds of every row with block metadata,
+        in row order; their max, floored at 0)."""
+        st = self._state(sim, avgdl)
+        out = st.get("ubs")
+        if out is None:
+            parts = [
+                _row_block_ubs(sim, r, avgdl)
+                for r in self.rows if len(r.blk_maxtf)
+            ]
+            ubs = np.concatenate(parts) if parts else np.empty(0)
+            out = st["ubs"] = (
+                ubs, max(0.0, float(ubs.max())) if len(ubs) else 0.0
+            )
+        return out
+
+    def norms(self, sim, avgdl: float) -> np.ndarray:
+        """tf_norm over ``full`` (which must be set)."""
+        st = self._state(sim, avgdl)
+        out = st.get("norms")
+        if out is None:
+            out = st["norms"] = sim.tf_norm(self.full[1], self.full[2], avgdl)
+        return out
+
+    def boosts(self, codec: str):
+        """Index-time boost marker cells → (sorted docids, boost
+        multipliers, max multiplier clamped at 1.0). The raw decode is
+        not kept — only the derived arrays."""
+        if self._boosts is None:
+            d, q, _ = decode_cell_rows(
+                [(bytes(r.postings), _cell_meta(r), None) for r in self.rows],
+                codec=codec,
+            )[:3]
+            order = np.argsort(d)
+            bv = q[order].astype(np.float64) / BOOST_SCALE
+            # clamp: every doc WITHOUT a boost entry scores with an
+            # implicit 1.0, so a shard whose covered boosts are all
+            # demotions (< 1) must still bound with 1.0 or WAND could
+            # prune a true top-k doc (round-2 advice)
+            self._boosts = (
+                d[order], bv, max(1.0, float(bv.max())) if len(bv) else 1.0
+            )
+        return self._boosts
+
+
+def term_cells(postings) -> list[TermCells]:
+    """A postings frame, a CellRow list, or a TermCells list → TermCells
+    list (rows grouped by (field, term))."""
+    if isinstance(postings, pd.DataFrame):
+        postings = rows_from_pandas(postings)
+    if postings and isinstance(postings[0], TermCells):
+        return postings
+    groups: dict = {}
+    for r in postings:
+        groups.setdefault((r.field, r.term), []).append(r)
+    return [TermCells(f, t, rows) for (f, t), rows in groups.items()]
+
+
 class ShardEval:
     """Evaluates a compiled plan against one shard's postings + doc lens."""
 
-    def __init__(self, plan: CompiledPlan, postings_pdf: pd.DataFrame,
+    def __init__(self, plan: CompiledPlan, postings,
                  lens_pdf: pd.DataFrame | None = None,
                  deleted: np.ndarray | None = None):
+        """``postings``: anything ``term_cells`` takes."""
         from montezuma_spark.search.similarity import BM25Similarity
 
         self.plan = plan
@@ -192,57 +344,23 @@ class ShardEval:
         # sets) or this shard's slice of the tombstone TABLE delivered via
         # cogroup (massive delete sets — see searcher._execute)
         self.deleted = deleted if deleted is not None else plan.deleted
-        # (field, term) → list of cell rows. Normally one row per key; a
-        # multi-segment (streaming) index contributes one row per segment,
-        # with disjoint ascending docid ranges (segment bases are allocated
-        # monotonically) — merged at decode time by first-docid order, the
-        # multi-term-doc-enum analog (src/index/multi-reader.lisp:225-318).
+        # (field, term) → TermCells
         self.cells: dict = {}
-        boost_rows = []
-        rows = (
-            postings_pdf
-            if isinstance(postings_pdf, list)
-            else rows_from_pandas(postings_pdf)
-        )
-        for r in rows:
-            if r.term == BOOST_TERM:
-                boost_rows.append(r)
-                continue
-            self.cells.setdefault((r.field, r.term), []).append(r)
-        for rows in self.cells.values():
-            if len(rows) > 1:
-                rows.sort(key=lambda r: r.blk_first[0] if len(r.blk_first) else 0)
+        boost = None  # the marker cells (one BOOST_FIELD)
+        for tc in term_cells(postings):
+            if tc.term == BOOST_TERM:
+                boost = tc
+            else:
+                self.cells[(tc.field, tc.term)] = tc
         # per-doc index-time boosts (marker cells): sorted docid -> boost
         # multiplier; max_boost keeps WAND upper bounds valid under boosting
         self.boost_d = None
         self.boost_v = None
         self.max_boost = 1.0
-        if boost_rows:
-            parts = [
-                decode_cell(
-                    bytes(r.postings),
-                    {
-                        "first": list(r.blk_first), "last": list(r.blk_last),
-                        "n": list(r.blk_n), "off": list(r.blk_off),
-                        "codes_len": list(r.blk_codes_len),
-                        "ext_len": list(r.blk_ext_len),
-                        "maxtf": list(r.blk_maxtf),
-                        "mindl": list(r.blk_mindl),
-                    },
-                    codec=plan.codec,
-                )
-                for r in boost_rows
-            ]
-            d = np.concatenate([p[0] for p in parts])
-            q = np.concatenate([p[1] for p in parts])
-            order = np.argsort(d)
-            self.boost_d = d[order]
-            self.boost_v = q[order].astype(np.float64) / BOOST_SCALE
-            # clamp: every doc WITHOUT a boost entry scores with an implicit
-            # 1.0, so a shard whose covered boosts are all demotions (< 1)
-            # must still bound with 1.0 or WAND could prune a true top-k
-            # doc (round-2 advice)
-            self.max_boost = max(1.0, float(self.boost_v.max()))
+        if boost is not None and boost.rows:
+            self.boost_d, self.boost_v, self.max_boost = boost.boosts(
+                plan.codec
+            )
         self.lens = {}
         if lens_pdf is not None and len(lens_pdf):
             tomb_mask = lens_pdf["field"] == TOMB_FIELD
@@ -264,13 +382,12 @@ class ShardEval:
 
     # ---------------------------------------------------------------- helpers
     def rebind(self, plan: CompiledPlan) -> "ShardEval":
-        """Cheap per-plan view sharing the parsed cell buckets, boost
-        arrays and lens map — bucketing rows into the (field, term) →
-        cells dict is plan-independent, so the batch kernel builds it
-        ONCE per task and rebinds per query instead of re-walking every
-        CellRow |batch| times. Shared CellRow decode memos stay valid:
-        a cell decode is query-independent and callers never mutate the
-        returned arrays."""
+        """Cheap per-plan view sharing the TermCells, boost arrays and
+        lens map — bucketing rows into the (field, term) → TermCells dict
+        is plan-independent, so the batch kernel builds it ONCE per task
+        and rebinds per query: every plan of the task shares one set of
+        decodes, bounds and tf_norm memos (all query-independent; callers
+        never mutate the returned arrays)."""
         from montezuma_spark.search.similarity import BM25Similarity
 
         ev = object.__new__(ShardEval)
@@ -285,21 +402,7 @@ class ShardEval:
         ev.lens = self.lens
         return ev
 
-    def _meta(self, row):
-        # int64 array views, never list(): boxing every per-block value
-        # to PyObjects cost ~316 rows × 8 fields × O(blocks) per hot
-        # multi-cell query; every consumer (decode_cell/_rows,
-        # block_upper_bounds, _blocks_for) np.asarray()s these anyway
-        return {
-            "first": np.asarray(row.blk_first, dtype=np.int64),
-            "last": np.asarray(row.blk_last, dtype=np.int64),
-            "n": np.asarray(row.blk_n, dtype=np.int64),
-            "off": np.asarray(row.blk_off, dtype=np.int64),
-            "codes_len": np.asarray(row.blk_codes_len, dtype=np.int64),
-            "ext_len": np.asarray(row.blk_ext_len, dtype=np.int64),
-            "maxtf": np.asarray(row.blk_maxtf, dtype=np.int64),
-            "mindl": np.asarray(row.blk_mindl, dtype=np.int64),
-        }
+    _meta = staticmethod(_cell_meta)
 
     def _blocks_for(self, meta, candidates: np.ndarray | None):
         """Indices of blocks containing any candidate docid (skip-to analog)."""
@@ -349,11 +452,17 @@ class ShardEval:
         return (docids[keep], *(a[keep] for a in parallel))
 
     def _decode(self, field, term, candidates=None):
-        rows = self.cells.get((field, term))
-        if not rows:
+        tc = self.cells.get((field, term))
+        if tc is None or not tc.rows:
             return _EMPTY[0], _EMPTY[0], _EMPTY[0]
-        if len(rows) == 1:
-            return self._drop_deleted(*self._decode_row(rows[0], candidates))
+        if tc.full is not None:
+            return self._drop_deleted(*tc.full)
+        if len(tc.rows) == 1:
+            row = tc.rows[0]
+            out = self._decode_row(row, candidates)
+            if row.full is not None:
+                tc.full = row.full
+            return self._drop_deleted(*out)
         # multi-cell term (one cell per docid-range shard / segment):
         # batch every uncached row into ONE vectorized decode pass per
         # stream (decode_cell_rows) — per-cell python overhead across
@@ -372,53 +481,55 @@ class ShardEval:
         order — sel = selected block indices (None = all), ns_sel = the
         per-selected-block posting counts. Rows are sorted by blk_first
         with disjoint docid ranges, so list-order concatenation stays
-        globally docid-sorted."""
-        rows = self.cells.get((field, term))
-        if not rows:
+        globally docid-sorted. A decode that covers every block of every
+        row becomes the term's ``full`` memo."""
+        tc = self.cells.get((field, term))
+        if tc is None or not tc.rows:
             return _EMPTY[0], _EMPTY[0], _EMPTY[0], []
-        parts: list = [None] * len(rows)
-        handles: list = [None] * len(rows)
-        batch, batch_idx, batch_sel, batch_ns = [], [], [], []
-        for i, r in enumerate(rows):
-            full = getattr(r, "full", None)
-            if full is not None:
-                # memoized full decode: only blk_n is needed for the
-                # handle — never rebuild the whole metadata dict here
-                parts[i] = full
-                handles[i] = (
-                    r, None, full[0], full[1],
-                    np.asarray(r.blk_n, dtype=np.int64),
-                )
-                continue
-            meta = self._meta(r)
-            ns = meta["n"]
-            sel = self._blocks_for(meta, candidates)
-            batch.append((bytes(r.postings), meta, sel))
-            batch_idx.append(i)
-            batch_sel.append(sel)
-            batch_ns.append(ns if sel is None else ns[sel])
-        if batch:
-            d, t, dl, row_n = decode_cell_rows(batch, codec=self.plan.codec)
-            ends = np.cumsum(row_n)
-            for k, i in enumerate(batch_idx):
-                s, e = ends[k] - row_n[k], ends[k]
-                parts[i] = (d[s:e], t[s:e], dl[s:e])
-                handles[i] = (
-                    rows[i], batch_sel[k], d[s:e], t[s:e], batch_ns[k]
-                )
-                if batch_sel[k] is None and hasattr(rows[i], "full"):
-                    # copy out of the whole-batch decode buffer: a memo
-                    # holding slice VIEWS would pin every row's streams
-                    # for one row's lifetime (shared cache-tier rows)
-                    rows[i].full = tuple(
-                        np.array(a, copy=True) for a in parts[i]
+        rows = tc.rows
+        if tc.full is None:
+            parts: list = [None] * len(rows)
+            sels: list = [None] * len(rows)
+            batch, batch_idx = [], []
+            for i, r in enumerate(rows):
+                if r.full is not None:
+                    parts[i] = r.full
+                    continue
+                meta = self._meta(r)
+                sels[i] = self._blocks_for(meta, candidates)
+                batch.append((bytes(r.postings), meta, sels[i]))
+                batch_idx.append(i)
+            if batch:
+                d, t, dl, row_n = decode_cell_rows(batch, codec=self.plan.codec)
+                ends = np.cumsum(row_n)
+                for k, i in enumerate(batch_idx):
+                    s, e = ends[k] - row_n[k], ends[k]
+                    parts[i] = (d[s:e], t[s:e], dl[s:e])
+            full = tuple(
+                parts[0][j] if len(parts) == 1
+                else np.concatenate([p[j] for p in parts])
+                for j in range(3)
+            )
+            if all(sel is None for sel in sels):
+                tc.set_full(*full)
+            else:
+                handles = []
+                for r, sel, p in zip(rows, sels, parts):
+                    ns = np.asarray(r.blk_n, dtype=np.int64)
+                    if sel is None and r.full is None:
+                        # copy out of the whole-batch decode buffer: a memo
+                        # holding slice VIEWS would pin every row's streams
+                        # for one row's lifetime (shared cache-tier rows)
+                        r.full = p = tuple(np.array(a, copy=True) for a in p)
+                    handles.append(
+                        (r, sel, p[0], p[1], ns if sel is None else ns[sel])
                     )
-        out = self._drop_deleted(
-            np.concatenate([p[0] for p in parts]),
-            np.concatenate([p[1] for p in parts]),
-            np.concatenate([p[2] for p in parts]),
-        )
-        return (*out, handles)
+                return (*self._drop_deleted(*full), handles)
+        handles = [
+            (r, None, r.full[0], r.full[1], np.asarray(r.blk_n, dtype=np.int64))
+            for r in rows
+        ]
+        return (*self._drop_deleted(*tc.full), handles)
 
     def _positions_flat_handles(self, wanted: np.ndarray, handles: list):
         """Positions of ``wanted`` docids using the decode handles from
@@ -500,10 +611,13 @@ class ShardEval:
                 flat_parts[fi] = fk
                 fb = fe
                 if full_cover and hasattr(row, "full_pos"):
-                    # copies, not views — see the row.full memo note
+                    # copies, not views, of the whole-batch decode buffers
+                    # (see _decode_with_handles); streams that already ARE
+                    # the row's full memo are kept as they are
+                    if row.full is None or d_k is not row.full[0]:
+                        d_k, t_k = np.array(d_k, copy=True), np.array(t_k, copy=True)
                     row.full_pos = (
-                        np.array(d_k, copy=True), np.array(t_k, copy=True),
-                        np.array(fk, copy=True),
+                        d_k, t_k, np.array(fk, copy=True),
                         np.concatenate([[0], np.cumsum(t_k)]),
                     )
         flat = (
@@ -531,20 +645,42 @@ class ShardEval:
             self.boost_d[idx] == docids, self.boost_v[idx], 1.0
         )
 
+    def _idf(self, field, term) -> float:
+        idf = self.plan.idf.get((field, term), 0.0)
+        return idf * idf if self.normalize else idf
+
+    def _avgdl(self, field) -> float:
+        return max(self.plan.stats.get(field, {}).get("avgdl", 1.0), 1e-9)
+
     def _bm25(self, field, term, docids, tfs, dls, boost) -> np.ndarray:
         """Per-posting score contribution: idf · boost · doc_boost ·
         similarity.tf_norm (BM25 by default; pluggable via the plan)."""
-        p = self.plan
-        idf = p.idf.get((field, term), 0.0)
-        if self.normalize:
-            idf = idf * idf
-        avgdl = max(p.stats.get(field, {}).get("avgdl", 1.0), 1e-9)
         return (
-            idf
+            self._idf(field, term)
             * boost
             * self._doc_boost(docids)
-            * self.sim.tf_norm(tfs, dls, avgdl)
+            * self.sim.tf_norm(tfs, dls, self._avgdl(field))
         )
+
+    def _term_scores(self, field, term, boost, candidates=None):
+        """(docids, scores) of one term, restricted to ``candidates``.
+        Once the term's full decode is memoized its tf_norm array is too,
+        so a warm term costs idf·boost·doc_boost·norms — the same factors
+        in the same association order as ``_bm25``, hence bit-identical
+        scores. Tombstones mask after the memo, as for every decode."""
+        tc = self.cells.get((field, term))
+        if tc is None or not tc.rows:
+            return _EMPTY
+        if tc.full is None:
+            d, t, dl = self._decode(field, term, candidates)
+        if tc.full is not None:
+            d, norms = self._drop_deleted(
+                tc.full[0], tc.norms(self.sim, self._avgdl(field))
+            )
+        else:
+            norms = self.sim.tf_norm(t, dl, self._avgdl(field))
+        d, norms = self._restrict(d, norms, candidates)
+        return d, self._idf(field, term) * boost * self._doc_boost(d) * norms
 
     @staticmethod
     def _restrict(docids, scores, candidates):
@@ -611,48 +747,18 @@ class ShardEval:
             return out
         return None
 
-    def _block_ubs(self, r, avgdl: float) -> np.ndarray:
-        """Per-block tf_norm upper bounds for one cell row. Uses the
-        competitive-impact fronts (max tf_norm over the block's ACTUAL
-        (tf, dl) Pareto pairs — tight) when the cell carries them; falls
-        back to the classic loose (maxtf, mindl) pairing for pre-impact
-        layouts. Valid under the Similarity monotone tf_norm contract."""
-        imp_n = r.blk_imp_n
-        if imp_n is not None and len(imp_n) == len(r.blk_n) and len(imp_n):
-            n = np.asarray(imp_n, dtype=np.int64)
-            norms = self.sim.tf_norm(
-                np.asarray(r.blk_imp_tf, dtype=np.int64),
-                np.asarray(r.blk_imp_dl, dtype=np.int64),
-                avgdl,
-            )
-            return np.maximum.reduceat(norms, np.cumsum(n) - n)
-        return self.sim.tf_norm(
-            np.asarray(r.blk_maxtf, dtype=np.int64),
-            np.asarray(r.blk_mindl, dtype=np.int64),
-            avgdl,
-        )
-
     def _term_ub(self, field: str, term: str, boost: float) -> float:
         """Score upper bound over this shard: idf·boost·max over blocks of
         the per-block bound (impact fronts when present, else
         tf_norm(maxtf, mindl)) — valid because the Similarity contract
         requires tf_norm monotone ↑ in tf and ↓ in dl (similarity.py)."""
-        rows = self.cells.get((field, term))
-        if not rows:
+        tc = self.cells.get((field, term))
+        if tc is None or not tc.rows:
             return 0.0
-        p = self.plan
-        avgdl = max(p.stats.get(field, {}).get("avgdl", 1.0), 1e-9)
-        mx = 0.0
-        for r in rows:
-            if len(r.blk_maxtf):
-                ubs = self._block_ubs(r, avgdl)
-                mx = max(mx, float(ubs.max()))
-        idf = p.idf.get((field, term), 0.0)
-        if self.normalize:
-            idf = idf * idf
+        _ubs, mx = tc.block_ubs(self.sim, self._avgdl(field))
         # max_boost keeps the bound valid for boosted docs (exact per-doc
         # boosts are applied when the postings actually decode)
-        return idf * boost * mx * self.max_boost
+        return self._idf(field, term) * boost * mx * self.max_boost
 
     def _try_pruned_term(self, field: str, term: str, boost: float):
         """Single-term top-k via block-max pruning — the degenerate (one
@@ -671,9 +777,10 @@ class ShardEval:
         k = self.plan.k
         if k is None or k <= 0 or self.plan.hot:
             return None
-        rows = self.cells.get((field, term))
-        if not rows:
+        tc = self.cells.get((field, term))
+        if tc is None or not tc.rows:
             return _EMPTY
+        rows = tc.rows
         # pruning pays only when the decode it avoids is expensive: below
         # ~64k postings the round machinery's python overhead exceeds ONE
         # vectorized full decode (measured 4-6 ms pruned vs 2.5-3.4 ms
@@ -686,28 +793,25 @@ class ShardEval:
         if all(getattr(r, "full", None) is not None for r in rows):
             return None
         p = self.plan
-        avgdl = max(p.stats.get(field, {}).get("avgdl", 1.0), 1e-9)
-        idf = p.idf.get((field, term), 0.0)
-        if self.normalize:
-            idf = idf * idf
-        scale = idf * boost * self.max_boost
+        scale = self._idf(field, term) * boost * self.max_boost
         if scale <= 0.0:
             return None  # a non-positive scale inverts the bound ordering
-        row_of, blk_of, ubs, ns = [], [], [], []
+        row_of, blk_of, ns = [], [], []
         for ri, r in enumerate(rows):
             nb = len(r.blk_maxtf)
             if nb == 0:
                 return None  # metadata-free cell → exact path
             row_of.append(np.full(nb, ri, dtype=np.int64))
             blk_of.append(np.arange(nb, dtype=np.int64))
-            ubs.append(self._block_ubs(r, avgdl) * scale)
             ns.append(np.asarray(r.blk_n, dtype=np.int64))
         row_of = np.concatenate(row_of)
         blk_of = np.concatenate(blk_of)
         # 1e-9 relative headroom: the exact per-doc score multiplies the
         # same factors in a different association order, so it can exceed
         # the bound by a few ulps — widen the bound, never narrow it
-        ubs = np.concatenate(ubs) * (1.0 + 1e-9)
+        ubs = tc.block_ubs(self.sim, self._avgdl(field))[0] * scale * (
+            1.0 + 1e-9
+        )
         ns = np.concatenate(ns)
         order = np.argsort(-ubs, kind="stable")
         total = len(order)
@@ -786,13 +890,15 @@ class ShardEval:
         # falling back to exact eval in that (rare) case
         if len({(f, t) for f, t, _ in flat}) != len(flat):
             return None
-        # one _term_ub pass per term (it walks every cell's impact front)
-        ranked = sorted(
-            ((self._term_ub(*x), x) for x in flat),
-            key=lambda p: (-p[0], p[1][0], p[1][1]),
+        # terms run in an order taken from the PLAN, (-(idf·boost), field,
+        # term), never from this shard's bounds: per-doc sums then add in
+        # the same order on every task and on the driver, so scores are
+        # bit-identical across tiers and reducer counts. Any order keeps
+        # the pruning exact — the suffix sums bound the unseen terms.
+        terms = sorted(
+            flat, key=lambda x: (-(self._idf(x[0], x[1]) * x[2]), x[0], x[1])
         )
-        terms = [x for _, x in ranked]
-        ubs = [ub for ub, _ in ranked]
+        ubs = [self._term_ub(*x) for x in terms]
         suffix = np.concatenate([np.cumsum(ubs[::-1])[::-1], [0.0]])
         docids = np.empty(0, dtype=np.int64)
         scores = np.empty(0, dtype=np.float64)
@@ -805,15 +911,12 @@ class ShardEval:
             if and_mode:
                 if len(docids) == 0:
                     break
-                d, t, dl = self._decode(field, term, docids)
-                s = self._bm25(field, term, d, t, dl, tboost)
-                d, s = self._restrict(d, s, docids)
+                d, s = self._term_scores(field, term, tboost, docids)
                 if len(d):
                     idx = np.searchsorted(docids, d)
                     scores[idx] += s
             else:
-                d, t, dl = self._decode(field, term)
-                s = self._bm25(field, term, d, t, dl, tboost)
+                d, s = self._term_scores(field, term, tboost)
                 docids, scores = self._union_sum(
                     [(docids, scores), (d, s)]
                 )
@@ -825,19 +928,14 @@ class ShardEval:
     def eval(self, node: Query, candidates: np.ndarray | None = None):
         """→ (sorted docids, scores). candidates (sorted) restricts output."""
         if isinstance(node, TermQuery):
-            d, t, dl = self._decode(node.field, node.term, candidates)
-            s = self._bm25(node.field, node.term, d, t, dl, node.boost)
-            return self._restrict(d, s, candidates)
+            return self._term_scores(
+                node.field, node.term, node.boost, candidates
+            )
         if isinstance(node, MultiTermGroup):
-            parts = []
-            for term in node.terms:
-                d, t, dl = self._decode(node.field, term, candidates)
-                d, s = self._restrict(
-                    d, self._bm25(node.field, term, d, t, dl, node.boost),
-                    candidates,
-                )
-                parts.append((d, s))
-            return self._union_sum(parts)
+            return self._union_sum([
+                self._term_scores(node.field, term, node.boost, candidates)
+                for term in node.terms
+            ])
         if isinstance(node, MatchAllQuery):
             alld = [d for d, _ in self.lens.values()]
             if not alld:
@@ -1059,7 +1157,8 @@ class ShardEval:
         (flat positions, per-doc lens). Fully vectorized — the phrase
         path never touches per-doc python lists."""
         W = len(wanted)
-        rows = self.cells.get((field, term)) or []
+        tc = self.cells.get((field, term))
+        rows = tc.rows if tc is not None else []
         if not rows:
             return np.empty(0, dtype=np.int64), np.zeros(W, dtype=np.int64)
         if len(rows) == 1:
@@ -1325,7 +1424,7 @@ class ShardEval:
         # decoded slot (docs ⊆ every slot's doc set by construction)
         d_0, _tf_0, dl_0 = streams[order1[0]]
         dl = dl_0[np.searchsorted(d_0, docs)].astype(np.float64)
-        avgdl = max(p.stats.get(field, {}).get("avgdl", 1.0), 1e-9)
+        avgdl = self._avgdl(field)
         dboost = self._doc_boost(docs)
         boost_arr = dboost if isinstance(dboost, np.ndarray) else None
         # Round sizing balances two costs that both hurt: position
@@ -1516,7 +1615,7 @@ class ShardEval:
         if self.normalize:
             idf = idf * idf
         dl = doc_dls[keep]
-        avgdl = max(p.stats.get(field, {}).get("avgdl", 1.0), 1e-9)
+        avgdl = self._avgdl(field)
         score = (
             idf
             * node.boost
@@ -1637,10 +1736,11 @@ class ShardEval:
         ascending) evaluate in doubling-budget chunks and the scan stops
         once k matches exist — the positions fetch + window kernels
         never touch the tail of a hot intersection. Returns None when
-        the shape can't exit early (no k, tiny df)."""
+        the shape can't exit early (no k, k <= 0, tiny df)."""
         k = self.plan.k
         if (
             k is None
+            or k <= 0
             or not isinstance(node, SpanNearQuery)
             or not node.terms
         ):
@@ -1844,9 +1944,7 @@ def explain_doc(plan: CompiledPlan, rows, docid: int,
             tf = int(t[idx]) if hit else 0
             dlv = int(dl[idx]) if hit else 0
             idf = ev.plan.idf.get((n.field, n.term), 0.0)
-            avgdl = max(
-                ev.plan.stats.get(n.field, {}).get("avgdl", 1.0), 1e-9
-            )
+            avgdl = ev._avgdl(n.field)
             tfn = (
                 float(ev.sim.tf_norm(
                     np.asarray([tf], dtype=np.int64),
@@ -1968,16 +2066,29 @@ def explain_doc(plan: CompiledPlan, rows, docid: int,
     return tree
 
 
-def _finish(plan: CompiledPlan, docids, scores) -> pd.DataFrame:
-    if len(docids) == 0:
-        return pd.DataFrame({"docid": [], "score": []}).astype(
-            {"docid": "int64", "score": "float64"}
-        )
+def top_k(docids, scores, k: int | None):
+    """(docids, scores) in (score desc, docid asc) order, cut to ``k``
+    (None = all) — hit-queue.lisp:3-9 inverted."""
+    order = np.lexsort((docids, -scores))
+    if k is not None:
+        order = order[:k]
+    return docids[order], scores[order]
+
+
+def _cut(plan: CompiledPlan, docids, scores):
+    """Per-task top-k: only truncation needs an order (the final stage
+    sorts), so a within-k result stays in docid order."""
     if plan.k is not None and len(docids) > plan.k:
-        # tie-break (score desc, docid asc) — hit-queue.lisp:3-9 inverted
-        order = np.lexsort((docids, -scores))[: plan.k]
-        docids, scores = docids[order], scores[order]
-    return pd.DataFrame({"docid": docids, "score": scores})
+        return top_k(docids, scores, plan.k)
+    return docids, scores
+
+
+def _finish(plan: CompiledPlan, docids, scores) -> pd.DataFrame:
+    docids, scores = _cut(plan, docids, scores)
+    return pd.DataFrame({
+        "docid": docids.astype(np.int64, copy=False),
+        "score": scores.astype(np.float64, copy=False),
+    })
 
 
 def make_kernel(plan: CompiledPlan):
@@ -2042,16 +2153,23 @@ def make_kernel_multi(plans: list):
         if not pdfs:
             return
         pdf = pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)
-        rows = rows_from_pandas(pdf)
-        base = None
+        base = ShardEval(plans[0][1], pdf)
+        qids, ds, ss = [], [], []
         for qid, plan in plans:
-            # bucket rows once per task; per-plan evals share the buckets
-            ev = ShardEval(plan, rows) if base is None else base.rebind(plan)
-            base = base or ev
-            out = _finish(plan, *ev.eval_top(plan.query))
-            if len(out):
-                out.insert(0, "qid", qid)
-                yield out
+            # bucket rows once per task; per-plan evals share the
+            # TermCells (decodes, bounds and tf_norm memos)
+            d, s = _cut(plan, *base.rebind(plan).eval_top(plan.query))
+            qids.append(qid)
+            ds.append(d)
+            ss.append(s)
+        n = np.fromiter((len(d) for d in ds), dtype=np.int64, count=len(ds))
+        if n.sum():
+            # ONE frame per task, not one per plan
+            yield pd.DataFrame({
+                "qid": np.repeat(np.asarray(qids, dtype=object), n),
+                "docid": np.concatenate(ds).astype(np.int64, copy=False),
+                "score": np.concatenate(ss).astype(np.float64, copy=False),
+            })
 
     return kernel
 
@@ -2081,36 +2199,21 @@ def _tree_has_docidset(q: Query) -> bool:
     return False
 
 
-def eval_local(plan: CompiledPlan, postings) -> pd.DataFrame:
-    """Driver-side evaluation over collected postings rows (the fast path
-    for small matched sets): ONE ShardEval pass over every row — cells
-    from different shards carry disjoint ascending docid ranges, so they
-    merge through the multi-segment cell path (blk_first order), exactly
-    like make_kernel_partition, and WAND pruning sees the GLOBAL top-k
-    threshold instead of 31 per-shard ones (strictly tighter).
-    ``postings``: a pandas frame OR a pre-parsed list[CellRow] (the
-    preload tier caches parsed rows so repeated queries skip pandas
-    entirely)."""
-    rows = (
-        postings
-        if isinstance(postings, list)
-        else rows_from_pandas(postings)
-    )
-    if not rows and not _tree_has_docidset(plan.query):
+def eval_local(plan: CompiledPlan, postings):
+    """Driver-side evaluation over collected postings (the fast path for
+    small matched sets) → (docids, scores) arrays in (score desc, docid
+    asc) order, cut to plan.k — no pandas on the warm path. ONE ShardEval
+    pass over every row — cells from different shards carry disjoint
+    ascending docid ranges, so they merge through the multi-segment cell
+    path (blk_first order), exactly like make_kernel_partition, and WAND
+    pruning sees the GLOBAL top-k threshold instead of 31 per-shard ones
+    (strictly tighter). ``postings``: anything ``term_cells`` takes — the
+    cell cache and the preload tier pass their TermCells, so repeated
+    queries reuse every per-term memo."""
+    terms = term_cells(postings)
+    if not any(tc.rows for tc in terms) and not _tree_has_docidset(plan.query):
         # zero cells can still match when the tree carries an explicit
         # bounded docid set (its universe needs no postings)
-        return pd.DataFrame({"docid": [], "score": []}).astype(
-            {"docid": "int64", "score": "float64"}
-        )
-    ev = ShardEval(plan, rows, None)
-    docids, scores = ev.eval_top(plan.query)
-    if len(docids) == 0:
-        return pd.DataFrame({"docid": [], "score": []}).astype(
-            {"docid": "int64", "score": "float64"}
-        )
-    if plan.k is not None and len(docids) > plan.k:
-        order = np.lexsort((docids, -scores))[: plan.k]
-    else:
-        order = np.lexsort((docids, -scores))
-    docids, scores = docids[order], scores[order]
-    return pd.DataFrame({"docid": docids, "score": scores})
+        return _EMPTY
+    ev = ShardEval(plan, terms, None)
+    return top_k(*ev.eval_top(plan.query), plan.k)

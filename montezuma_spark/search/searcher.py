@@ -54,6 +54,7 @@ from montezuma_spark.search.ast import (
 from montezuma_spark.search.kernel import (
     CompiledPlan,
     MultiTermGroup,
+    TermCells,
     eval_local,
     make_kernel,
     make_kernel_cogrouped_tombstones,
@@ -184,7 +185,7 @@ class Searcher:
         self._exp_cache: dict = {}               # range/wildcard -> ((t, df),)
         self._exp_cache_terms = 0                # total tuples held (bound)
         self._hot: dict | None = None
-        self._hot_parsed: dict = {}             # (field, term) -> [CellRow]
+        self._hot_parsed: dict = {}             # (field, term) -> TermCells
         self._tomb_df = None                     # tombstone table (big sets)
         self._preload = preload
         self._preload_max_bytes = preload_max_bytes
@@ -219,17 +220,52 @@ class Searcher:
             }
         return self._hot
 
-    def _hot_rows(self, key) -> list:
-        """Parsed CellRow list for one hot (field, term) — parsed ONCE and
+    def _hot_term(self, key) -> TermCells:
+        """TermCells for one hot (field, term) — parsed ONCE and
         memoized: repeated queries pay zero pandas row-accessor cost
-        (which profiled at ~74% of hot-serving latency)."""
-        rows = self._hot_parsed.get(key)
-        if rows is None:
+        (which profiled at ~74% of hot-serving latency) and share the
+        term's decode memos."""
+        tc = self._hot_parsed.get(key)
+        if tc is None:
             from montezuma_spark.search.kernel import rows_from_pandas
 
-            rows = rows_from_pandas(self._hot_cells()[key])
-            self._hot_parsed[key] = rows
-        return rows
+            tc = TermCells(*key, rows_from_pandas(self._hot_cells()[key]))
+            self._hot_parsed[key] = tc
+        return tc
+
+    def _hot_terms(self, needed: dict) -> list:
+        """The preload tier's TermCells for {field: terms} (+ the boost
+        marker cells on boosted indexes)."""
+        from montezuma_spark.codec.postings import BOOST_TERM
+
+        hot = self._hot_cells()
+        out = [
+            self._hot_term((f, t))
+            for f, terms in needed.items()
+            for t in sorted(terms)
+            if (f, t) in hot
+        ]
+        if self.index.config.boost_col is not None:
+            out += [
+                self._hot_term(key)
+                for key in sorted(k for k in hot if k[1] == BOOST_TERM)
+            ]
+        return out
+
+    def _local_df(self, docids, scores, qids=None) -> DataFrame:
+        """Driver-local result arrays → a Spark DataFrame (docid, score),
+        or (qid, docid, score) with ``qids`` — the one place a local
+        result becomes a frame, for callers that hand rows to Spark."""
+        import pandas as pd
+
+        cols = {"docid": docids, "score": scores}
+        schema = RESULT_SCHEMA
+        if qids is not None:
+            cols = {"qid": qids, **cols}
+            schema = BATCH_RESULT_SCHEMA
+        return self.index.spark.createDataFrame(
+            pd.DataFrame(cols), schema=schema
+        )
 
     # ------------------------------------------------------------- dictionary
     def _dictionary(self) -> dict:
@@ -1009,12 +1045,9 @@ class Searcher:
             # zero postings terms: the match universe IS the bounded
             # docid set — evaluate driver-side (plan.deleted masks
             # deletes; a zero-row kernel would return nothing)
-            local = eval_local(
+            return self._local_df(*eval_local(
                 plan, self._fetch_postings_pdf(resolved, need_pos)
-            )
-            return self.index.spark.createDataFrame(
-                local, schema=RESULT_SCHEMA
-            )
+            ))
         tomb_df = self._tombstones_df()
         if tomb_df is not None and not self._has_matchall(resolved):
             # massive delete set: strip the array from the shipped plan and
@@ -1073,8 +1106,9 @@ class Searcher:
         )
 
     def _execute_local(self, query: Query, k: int | None):
-        """Driver-side fast path → pandas DataFrame(docid, score), or None
-        if not eligible (MatchAll present or matched postings too large)."""
+        """Driver-side fast path → (docids, scores) arrays in (score desc,
+        docid asc) order, cut to k — or None if not eligible (MatchAll
+        present or matched postings too large)."""
         if self._force_distributed:
             return None
         plan, resolved, need_pos = self._compile(query, k)
@@ -1094,24 +1128,13 @@ class Searcher:
         if est > limit:
             return None
         if self._preload:
-            from montezuma_spark.codec.postings import BOOST_TERM
-
-            hot = self._hot_cells()
-            rows = []
-            for f, terms in needed.items():
-                for t in sorted(terms):
-                    if (f, t) in hot:
-                        rows.extend(self._hot_rows((f, t)))
-            if self.index.config.boost_col is not None:
-                for key in sorted(k for k in hot if k[1] == BOOST_TERM):
-                    rows.extend(self._hot_rows(key))
             plan.hot = True  # enable decode-once row caches (shared rows)
-            return eval_local(plan, rows)
+            return eval_local(plan, self._hot_terms(needed))
         rows = self._cached_rows(resolved, need_pos)
         if rows is not None:
             # NOTE: plan.hot stays False — the pruned single-term path
             # remains available; full-decode memos still attach to the
-            # shared rows whenever a full decode happens naturally
+            # shared TermCells whenever a full decode happens naturally
             return eval_local(plan, rows)
         return eval_local(plan, self._fetch_postings_pdf(resolved, need_pos))
 
@@ -1120,13 +1143,15 @@ class Searcher:
         saved indexes — the Lucene LRUQueryCache analog at cell
         granularity. A warm query skips the parquet point read and the
         pandas parse entirely (the two dominant costs of the local tier
-        after decode batching) and reuses any decode memos already on the
-        shared rows. Caches ONLY queried terms (the default tier still
+        after decode batching) and reuses every per-term memo already on
+        the shared TermCells (full decode, block bounds, tf_norm). Caches
+        ONLY queried terms (the default tier still
         never collects the vocabulary); evicted LRU by payload bytes.
         Returns None when disabled or the index has no saved layout.
         Cells are immutable per saved layout and decode is
         delete-independent (tombstones mask after decode), so deletes
-        never invalidate entries."""
+        never invalidate entries; the (similarity, avgdl)-keyed memos
+        recompute if either changes."""
         if self._cell_cache_max <= 0:
             return None
         if self.index._postings_dataset() is None:
@@ -1134,7 +1159,7 @@ class Searcher:
         return self._ensure_cells(self._needed_terms(resolved), need_pos)
 
     def _ensure_cells(self, needed: dict, need_pos: bool) -> list:
-        """Rows for {field: terms} through the cell cache, fetching every
+        """TermCells for {field: terms} through the cell cache, fetching every
         missing term in ONE arrow point read (callers pre-gate on
         ``_cell_cache_max`` > 0 and a saved layout)."""
         dset = self.index._postings_dataset()
@@ -1189,41 +1214,36 @@ class Searcher:
                     sub = pdf[boost_mask] if len(pdf) else pdf
                 else:
                     sub = groups.get(ft)
-                rows = (
+                tc = TermCells(
+                    *ft,
                     rows_from_pandas(sub)
                     if sub is not None and len(sub)
-                    else []  # negative entry: absent terms never refetch
+                    else [],  # negative entry: absent terms never refetch
                 )
-                have[ft] = rows
-                self._cell_cache_put((ft, need_pos), rows)
-        out: list = []
-        for ft in want:
-            out.extend(have[ft])
-        return out
+                have[ft] = tc
+                self._cell_cache_put((ft, need_pos), tc)
+        return [have[ft] for ft in want]
 
-    def _cell_cache_put(self, key, rows) -> None:
-        # charge each entry its payload PLUS its decode-memo potential —
-        # shared rows accumulate row.full (~24 B/posting) and row.full_pos
-        # (~8 B/position) memos the payload bytes alone would hide, and
-        # the budget must bound RESIDENT driver memory, not just parquet
-        # bytes (review finding: 3.2 B/posting payload can pin ~10x that
-        # once fully decoded)
-        nbytes = 240 * (len(rows) + 1)  # row + entry overhead estimate
-        for r in rows:
-            if isinstance(r.postings, (bytes, bytearray, memoryview)):
-                nbytes += len(r.postings)
-            try:  # full memo: 3 int64 streams per posting
-                nbytes += 24 * int(np.asarray(r.blk_n, dtype=np.int64).sum())
-            except (TypeError, ValueError):
-                pass
-            if isinstance(r.positions, (bytes, bytearray, memoryview)):
-                # payload + full_pos memo (~8 B/position vs ~3.2 packed)
-                nbytes += len(r.positions) + (len(r.positions) * 5) // 2
+    def _cell_cache_put(self, key, tc: TermCells) -> None:
+        # charge each entry its payload PLUS its memo potential — a shared
+        # TermCells accumulates its full decode (24 B/posting), tf_norm
+        # array (8 B/posting), block bounds (8 B/block) and each row's
+        # full_pos (8 B/position + up to 24 B/posting) that the payload
+        # bytes alone would hide, and the budget must bound RESIDENT
+        # driver memory, not just parquet bytes (a 3.2 B/posting payload
+        # can pin ~10x that once fully decoded)
+        nbytes = 240 * (len(tc.rows) + 1)  # row + entry overhead estimate
+        for r in tc.rows:
+            n_post = int(np.asarray(r.blk_n, dtype=np.int64).sum())
+            nbytes += len(r.postings) + 32 * n_post + 8 * len(r.blk_n)
+            if isinstance(r.positions, (bytes, bytearray)) and r.positions:
+                n_pos = r.cf if r.cf is not None else len(r.positions)
+                nbytes += len(r.positions) + 8 * int(n_pos) + 24 * n_post
         with self._cell_cache_lock:
             old = self._cell_cache.pop(key, None)
             if old is not None:
                 self._cell_cache_size -= old[1]
-            self._cell_cache[key] = (rows, nbytes)
+            self._cell_cache[key] = (tc, nbytes)
             self._cell_cache_size += nbytes
             while (self._cell_cache_size > self._cell_cache_max
                    and len(self._cell_cache) > 1):
@@ -1322,13 +1342,8 @@ class Searcher:
         fetch = (k + first_doc) if k is not None else None
         local = self._execute_local(query, fetch)
         if local is not None:
-            if k is not None:
-                local = local.iloc[first_doc : first_doc + k]
-            elif first_doc:
-                local = local.iloc[first_doc:]
-            result = self.index.spark.createDataFrame(
-                local, schema=RESULT_SCHEMA
-            )
+            end = None if k is None else first_doc + k
+            result = self._local_df(*(a[first_doc:end] for a in local))
         else:
             result = self._execute(query, fetch)
             if k is not None:
@@ -1373,12 +1388,9 @@ class Searcher:
         d, s = int(after[0]), float(after[1])
         local = self._execute_local(query, None)
         if local is not None:
-            m = (local["score"] < s) | (
-                (local["score"] == s) & (local["docid"] > d)
-            )
-            result = self.index.spark.createDataFrame(
-                local[m].iloc[:k], schema=RESULT_SCHEMA
-            )
+            docids, scores = local
+            m = (scores < s) | ((scores == s) & (docids > d))
+            result = self._local_df(docids[m][:k], scores[m][:k])
         else:
             cursor = (F.col("score") < s) | (
                 (F.col("score") == s) & (F.col("docid") > d)
@@ -1445,23 +1457,19 @@ class Searcher:
                 res = res.select(F.lit(qid).alias("qid"), "docid", "score")
                 out = res if out is None else out.unionByName(res)
             return self._finish_batch(out, k)
-        local_parts: list = []
+        local_parts: list = []  # (qid, docids, scores)
         if self._preload and not self._force_distributed:
             # hot tier: every cell is parsed/decoded in driver memory —
             # a per-query local eval (~1 ms each) beats any Spark job;
             # queries the local tier refuses (MatchAll, oversized
             # matches) stay in `items` for the distributed machinery
-            import pandas as pd
-
             rest = []
             for qid, q in items:
                 local = self._execute_local(q, k)
                 if local is None:
                     rest.append((qid, q))
-                    continue
-                pdf = (local.iloc[:k] if k is not None else local).copy()
-                pdf.insert(0, "qid", qid)
-                local_parts.append(pdf)
+                else:
+                    local_parts.append((qid, *local))
             items = rest
         # amortize dictionary resolution across the batch: ONE df seek for
         # every exact (field, term) in ANY query (warms _df_cache), then
@@ -1527,8 +1535,6 @@ class Searcher:
             batch.append((qid, plan, needed))
             need_pos_any = need_pos_any or need_pos
         if local_batch:
-            from montezuma_spark.search.kernel import eval_local
-
             # prefetch: ONE point read per positions-variant for every
             # missing term across the whole local sub-batch. Positional
             # first: a cached with-positions entry serves later
@@ -1543,11 +1549,8 @@ class Searcher:
                 if pre:
                     self._ensure_cells(pre, np_flag)
             for qid, plan, needed, need_pos in local_batch:
-                rows = self._ensure_cells(needed, need_pos)  # cache hits
-                pdf = eval_local(plan, rows)
-                pdf = (pdf.iloc[:k] if k is not None else pdf).copy()
-                pdf.insert(0, "qid", qid)
-                local_parts.append(pdf)
+                terms = self._ensure_cells(needed, need_pos)  # cache hits
+                local_parts.append((qid, *eval_local(plan, terms)))
         out = None
         if batch:
             postings = self._postings_for(union_needed, need_pos_any)
@@ -1585,11 +1588,12 @@ class Searcher:
             res = res.select(F.lit(qid).alias("qid"), "docid", "score")
             out = res if out is None else out.unionByName(res)
         if local_parts:
-            import pandas as pd
-
-            loc = self.index.spark.createDataFrame(
-                pd.concat(local_parts, ignore_index=True),
-                schema=BATCH_RESULT_SCHEMA,
+            qids, ds, ss = zip(*local_parts)
+            loc = self._local_df(
+                np.concatenate(ds), np.concatenate(ss),
+                qids=np.repeat(
+                    np.asarray(qids, dtype=object), [len(d) for d in ds]
+                ),
             )
             out = loc if out is None else out.unionByName(loc)
         return self._finish_batch(out, k)
@@ -1618,12 +1622,9 @@ class Searcher:
         fetch = (k + first_doc) if k is not None else None
         local = self._execute_local(query, fetch)
         if local is not None:
-            sel = (
-                local.iloc[first_doc : first_doc + k]
-                if k is not None
-                else local.iloc[first_doc:]
-            )
-            return list(sel.itertuples(index=False, name=None))
+            end = None if k is None else first_doc + k
+            d, s = local
+            return list(zip(d[first_doc:end].tolist(), s[first_doc:end].tolist()))
         # distributed: (docid, score) only — skip search()'s doc_map key
         # join, which top_docs never returns
         result = self._execute(query, fetch).orderBy(
@@ -1645,17 +1646,7 @@ class Searcher:
         plan, resolved, need_pos = self._compile(query, None)
         needed = self._needed_terms(resolved)
         if self._preload:
-            from montezuma_spark.codec.postings import BOOST_TERM
-
-            hot = self._hot_cells()
-            rows = []
-            for f, terms in needed.items():
-                for t in sorted(terms):
-                    if (f, t) in hot:
-                        rows.extend(self._hot_rows((f, t)))
-            if self.index.config.boost_col is not None:
-                for key in sorted(k for k in hot if k[1] == BOOST_TERM):
-                    rows.extend(self._hot_rows(key))
+            rows = self._hot_terms(needed)
             plan.hot = True
         else:
             postings, _ = self._filtered_postings(resolved, need_pos)
@@ -1678,14 +1669,14 @@ class Searcher:
         """All matching docids, sorted — the golden doc-set surface."""
         local = self._execute_local(query, None)
         if local is not None:
-            return sorted(int(d) for d in local["docid"])
+            return np.sort(local[0]).tolist()
         rows = self._execute(query, None).select("docid").collect()
         return sorted(r["docid"] for r in rows)
 
     def count(self, query: Query) -> int:
         local = self._execute_local(query, None)
         if local is not None:
-            return len(local)
+            return len(local[0])
         return self._execute(query, None).count()
 
     def more_like_this(self, docid: int, field: str | None = None,
@@ -1877,9 +1868,7 @@ class Searcher:
         cols = [cols] if isinstance(cols, str) else list(cols)
         local = self._execute_local(query, None)
         if local is not None:
-            matched = self.index.spark.createDataFrame(
-                local, schema=RESULT_SCHEMA
-            )
+            matched = self._local_df(*local)
         else:
             matched = self._execute(query, None)
         out = matched.select("docid").join(
@@ -1909,9 +1898,7 @@ class Searcher:
         which must co-locate every hit of a value to rank them."""
         local = self._execute_local(query, None)
         if local is not None:
-            matched = self.index.spark.createDataFrame(
-                local, schema=RESULT_SCHEMA
-            )
+            matched = self._local_df(*local)
         else:
             matched = self._execute(query, None)
         hits = matched.select("docid", "score").join(
@@ -1959,9 +1946,7 @@ class Searcher:
         ``k_groups × k_per_group`` rows leave it."""
         local = self._execute_local(query, None)
         if local is not None:
-            matched = self.index.spark.createDataFrame(
-                local, schema=RESULT_SCHEMA
-            )
+            matched = self._local_df(*local)
         else:
             matched = self._execute(query, None)
         hits = matched.select("docid", "score").join(
@@ -2029,7 +2014,7 @@ class Searcher:
         """
         local = self._execute_local(query, None)
         if local is not None:
-            result = self.index.spark.createDataFrame(local, schema=RESULT_SCHEMA)
+            result = self._local_df(*local)
         else:
             result = self._execute(query, None)
         out = result.join(self.index.doc_map, "docid", "inner")
@@ -2207,8 +2192,7 @@ class Searcher:
         (src/search/index-searcher.lisp:110-119); unordered, distributed."""
         local = self._execute_local(query, None)
         if local is not None:
-            for t in local.itertuples(index=False, name=None):
-                yield t
+            yield from zip(local[0].tolist(), local[1].tolist())
             return
         for row in self._execute(query, None).toLocalIterator():
             yield (row["docid"], row["score"])

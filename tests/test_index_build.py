@@ -427,3 +427,25 @@ def test_snippets_best_passage(spark, tmp_path):
         best["n_matches"], len(best["terms"]), -best["start"])
     # n=1 returns only the best
     assert s.snippets(q, 0, window=40)[0]["start"] == best["start"]
+
+
+def test_unpersist_releases_build_caches(spark, tmp_path):
+    """build_index keeps handles to the frames it persists; unpersist()
+    drops them, and a saved index keeps serving from its files."""
+    from montezuma_spark.index import FieldConfig, IndexConfig, build_index
+    from montezuma_spark.search import Searcher, TermQuery
+
+    cfg = IndexConfig(
+        fields=[FieldConfig("field", "field", "whitespace")],
+        key_col="url", shard_bits=3,
+    )
+    idx = build_index(spark, search_docs_df(spark), cfg,
+                      index_dir=str(tmp_path / "ix"))
+    assert len(idx._persisted) == 2
+    assert all(df.is_cached for df in idx._persisted)
+    frames = list(idx._persisted)
+    want = Searcher(idx).top_docs(TermQuery("field", "word2"))
+    idx.unpersist()
+    assert not idx._persisted
+    assert not any(df.is_cached for df in frames)
+    assert Searcher(idx).top_docs(TermQuery("field", "word2")) == want
